@@ -40,12 +40,27 @@ class FitsDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "fits"
   override def supportsExternalMetadata(): Boolean = true
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    FitsResolution(options.asCaseSensitiveMap().asScala.toMap).tableSchema
+  /** Spark builds a provider per load() and calls inferSchema, then
+    * getTable with the same options: the resolution inferSchema built
+    * (file list, first-file walk) is handed to getTable, so one load()
+    * lists and walks once. getTable consumes it, so nothing outlives
+    * the load() that built it. */
+  private var inferred: Option[FitsResolution] = None
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val res = FitsResolution(options.asCaseSensitiveMap().asScala.toMap)
+    synchronized { inferred = Some(res) }
+    res.tableSchema
+  }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val res = FitsResolution(properties.asScala.toMap)
+    val options = properties.asScala.toMap
+    val res = synchronized {
+      val r = inferred.filter(_.options == options)
+      inferred = None
+      r
+    }.getOrElse(FitsResolution(options))
     // the inferred-schema comparison must not force file resolution:
     // a write targets a directory that may not exist yet
     new FitsTable(res, Option(schema).filter(s =>
@@ -53,9 +68,13 @@ class FitsDataSource extends TableProvider with DataSourceRegister {
   }
 }
 
-/** Driver-side resolution of one read: file list + first-file structure.
-  * Eagerly validates options the way the reference does
-  * (FitsSourceRelation.scala:109-120). */
+/** Driver-side resolution of one read: the file list and each file's
+  * HDUs, walked at most once. Eagerly validates options the way the
+  * reference does (FitsSourceRelation.scala:109-120).
+  *
+  * Lifetime: one resolution per load(), held by the table, so a loaded
+  * DataFrame keeps its file list and headers for every action it runs
+  * (like Spark's own file sources); a new load() sees changed files. */
 final case class FitsResolution(options: Map[String, String]) {
   private val ci: Map[String, String] = options.map { case (k, v) => k.toLowerCase -> v }
 
@@ -234,10 +253,27 @@ final case class FitsResolution(options: Map[String, String]) {
 
   @transient lazy val files: Seq[Path] = FitsFiles.resolve(pathSpec, hadoopConf)
 
-  @transient lazy val firstFileHdus: Vector[Hdu] = scanFile(files.head)
+  /** One file's HDUs, walked on first use and then kept. */
+  private final class Walk(val path: Path) {
+    lazy val hdus: Vector[Hdu] = scanFile(path)
+  }
+  @transient private lazy val walks: Vector[Walk] = files.map(new Walk(_)).toVector
+
+  def firstFileHdus: Vector[Hdu] = walks.head.hdus
+
+  /** Every file's HDUs in file order, walked in parallel on first use —
+    * shared by statistics, partition planning and metadata aggregates
+    * of every scan over this resolution. */
+  @transient lazy val fileHdus: Seq[(Path, Vector[Hdu])] =
+    FitsFiles.parMap(walks, 16)(w => w.path -> w.hdus)
 
   def scanFile(p: Path): Vector[Hdu] =
     FitsStructure.scan(p.getFileSystem(hadoopConf), p)
+
+  /** Walks `ps` without keeping the result here — for paths outside
+    * [[files]], such as a stream's newly arrived files. */
+  def scanFiles(ps: Seq[Path]): Seq[(Path, Vector[Hdu])] =
+    FitsFiles.parMap(ps, 16)(p => p -> scanFile(p))
 
   /** The target HDU's metadata with the `columns` option applied. */
   def targetMeta(hdus: Vector[Hdu], file: Path): HduMeta = {
@@ -271,8 +307,8 @@ final case class FitsResolution(options: Map[String, String]) {
     val chosen =
       if (meta.isReadable || mode == "FAILFAST" || files.lengthCompare(1) == 0)
         meta
-      else files.drop(1).iterator
-        .map(p => targetMeta(scanFile(p), p))
+      else walks.iterator.drop(1)
+        .map(w => targetMeta(w.hdus, w.path))
         .collectFirst { case m if m.isReadable => m }
         .getOrElse(meta)
     recordLength.foreach { rl =>
@@ -716,8 +752,7 @@ final class FitsAggScan(res: FitsResolution, kinds: Array[Int])
 
   override def planInputPartitions(): Array[InputPartition] = {
     val firstSchema = res.inferredSchema
-    FitsFiles.parMap(res.files, 16)(p => p -> res.scanFile(p))
-      .toArray.flatMap { case (path, hdus) =>
+    res.fileHdus.toArray.flatMap { case (path, hdus) =>
       val idxs = res.hduIndicesFor(hdus)
       val missing = res.missingHduTokens(hdus)
       if (missing.nonEmpty && res.mode == "FAILFAST")
@@ -872,18 +907,12 @@ final class FitsScan(res: FitsResolution, tableSchema: StructType,
     * FITS auto-broadcasts exactly like a parquet one would. The size is
     * scaled down to the pruned column fraction so projection-heavy
     * plans see the bytes they will actually move. */
-  /** One header walk per file PER SCAN, shared by estimateStatistics
-    * and planInputPartitions — both run during planning of the same
-    * query, and at a 100k-file archive a second full walk doubles the
-    * driver's planning IO for nothing (headers are immutable within a
-    * query by the standard file-source contract). */
-  @transient private lazy val scanFileMetas: Seq[(Path, Vector[Hdu])] =
-    FitsFiles.parMap(res.files, 16)(p => p -> res.scanFile(p))
-
   private lazy val stats: (Long, Long) = {
     // targetMeta (not raw meta): the `columns` option reorders/prunes
-    // the column set that tableSchema's positions refer to
-    val metas = scanFileMetas
+    // the column set that tableSchema's positions refer to. The walks
+    // are the resolution's: one header walk per file per load(), shared
+    // with planning and with every other scan of the same DataFrame.
+    val metas = res.fileHdus
       .flatMap { case (_, hdus) =>
         res.hduIndicesFor(hdus)
           .filter(i => i >= 0 && i < hdus.length)
@@ -963,12 +992,15 @@ final class FitsScan(res: FitsResolution, tableSchema: StructType,
         s" statsFilters=${valueFilters.mkString(",")}" else "")
 
   override def planInputPartitions(): Array[InputPartition] =
-    planFor(res.files)
+    planFor(res.fileHdus)
 
-  /** Plans row-aligned partitions for `files` — shared by the batch
-    * path (all resolved files) and the micro-batch stream (only the
-    * files new to the current batch). */
-  private[fits] def planFor(files: Seq[Path]): Array[InputPartition] = {
+  /** Plans row-aligned partitions for walked files — shared by the
+    * batch path (the resolution's files and walks) and the micro-batch
+    * stream (only the files new to the current batch, walked per batch
+    * and not kept, so a long-running stream holds no headers of files
+    * it has finished). */
+  private[fits] def planFor(fileMetas: Seq[(Path, Vector[Hdu])])
+      : Array[InputPartition] = {
     val session = SparkSession.active
     val conf = session.sessionState.conf
     // Positional pruning: user-supplied schemas rename columns, so map
@@ -977,15 +1009,9 @@ final class FitsScan(res: FitsResolution, tableSchema: StructType,
     val positions: Array[Int] =
       required.fieldNames.map(n => tableSchema.fieldIndex(n))
 
-    // Per-file structural scans, parallelized on the driver: one header
-    // walk (a few KB of reads) per file. The reference re-walks every
-    // file inside every task instead (FitsLib.scala:181-202). The batch
-    // path reuses the walk estimateStatistics already did; the
-    // micro-batch stream passes per-batch file subsets and walks those.
-    val fileMetas: Seq[(Path, Vector[Hdu])] =
-      if (files eq res.files) scanFileMetas
-      else FitsFiles.parMap(files, 16)(p => p -> res.scanFile(p))
-
+    // `fileMetas` are driver-side header walks, a few KB of reads per
+    // file. The reference re-walks every file inside every task instead
+    // (FitsLib.scala:181-202).
     val firstSchema = res.inferredSchema
     // Same split sizing as Spark's own file sources: honor
     // maxPartitionBytes, but split smaller files further so the scan
@@ -1305,7 +1331,7 @@ final class FitsMicroBatchStream(scan: FitsScan, res: FitsResolution)
     val fresh = end.asInstanceOf[FitsStreamOffset].files
       .filterNot(seen).sorted.map(new Path(_))
     if (fresh.isEmpty) Array.empty
-    else scan.planFor(fresh)
+    else scan.planFor(res.scanFiles(fresh))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

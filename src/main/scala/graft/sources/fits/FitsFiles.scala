@@ -1,5 +1,7 @@
 package graft.sources.fits
 
+import java.io.FileNotFoundException
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
@@ -21,16 +23,18 @@ object FitsFiles {
   private def one(spec: String, conf: Configuration): Seq[Path] = {
     val path = new Path(spec)
     val fs = path.getFileSystem(conf)
-    if (fs.exists(path)) {
-      val status = fs.getFileStatus(path)
-      if (status.isDirectory) listFits(fs, path)
-      else Seq(path)
-    } else {
-      // not a literal path — try as a glob
-      val matched = Option(fs.globStatus(path)).getOrElse(Array.empty)
-      matched.toSeq.flatMap { st =>
-        if (st.isDirectory) listFits(fs, st.getPath) else Seq(st.getPath)
-      }
+    val status =
+      try Some(fs.getFileStatus(path))
+      catch { case _: FileNotFoundException => None }
+    status match {
+      case Some(st) if st.isDirectory => listFits(fs, path)
+      case Some(_) => Seq(path)
+      case None =>
+        // not a literal path — try as a glob
+        val matched = Option(fs.globStatus(path)).getOrElse(Array.empty)
+        matched.toSeq.flatMap { st =>
+          if (st.isDirectory) listFits(fs, st.getPath) else Seq(st.getPath)
+        }
     }
   }
 
@@ -49,14 +53,18 @@ object FitsFiles {
       finally pool.shutdown()
     }
 
+  /** Every `*.fits` file under `dir`, at any depth, sorted by path.
+    * Plain `listStatus` per directory: `listFiles` also fetches each
+    * file's block locations and, on the local FS, its owner and
+    * permissions — milliseconds per file, none of it used here. */
   private def listFits(fs: FileSystem, dir: Path): Seq[Path] = {
-    val it = fs.listFiles(dir, /* recursive = */ true)
     val buf = Seq.newBuilder[Path]
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.toLowerCase.endsWith(".fits"))
+    def walk(d: Path): Unit = fs.listStatus(d).foreach { st =>
+      if (st.isDirectory) walk(st.getPath)
+      else if (st.isFile && st.getPath.getName.toLowerCase.endsWith(".fits"))
         buf += st.getPath
     }
+    walk(dir)
     buf.result().sortBy(_.toString)
   }
 }

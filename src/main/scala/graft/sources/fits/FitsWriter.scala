@@ -272,9 +272,11 @@ final class FitsBatchWrite(res: FitsResolution, schema: StructType,
   FitsWriteSupport.validateCompress(res)
 
   // captured BEFORE tasks run: overwrite deletes exactly these at commit
+  // (the resolution's listing, already taken when getTable compared
+  // schemas)
   private val preExisting: Seq[String] =
     if (!truncate) Nil
-    else try FitsFiles.resolve(res.pathSpec, res.hadoopConf).map(_.toString)
+    else try res.files.map(_.toString)
     catch { case _: IllegalArgumentException => Nil }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {

@@ -234,29 +234,37 @@ object FitsStructure {
     } finally in.close()
   }
 
-  /** Reads header blocks at `pos` until the END card; returns the parsed
-    * header and its padded byte size. */
+  /** Reads header blocks at `pos`, one block at a time, until the block
+    * holding the END card; returns the parsed header and its padded
+    * byte size. Each block is read once and only the new block is
+    * searched, so a header costs its own size in I/O, and a header with
+    * no END fails after reading at most [[MaxHeaderBlocks]] blocks. */
   private def readHeader(in: FSDataInputStream, pos: Long, fileLen: Long,
       path: Path): (FitsHeader, Long) = {
-    var blocks = 1
-    while (blocks <= MaxHeaderBlocks) {
-      val size = blocks * BlockSize
-      if (pos + size > fileLen)
+    var buf = new Array[Byte](BlockSize)
+    var size = 0
+    while (size < MaxHeaderBlocks * BlockSize) {
+      if (pos + size + BlockSize > fileLen)
         throw new IllegalArgumentException(
           s"$path: header at byte $pos runs past EOF without an END card " +
             "— not a valid FITS file")
-      val buf = new Array[Byte](size)
-      in.readFully(pos, buf)
-      if (containsEnd(buf)) return (FitsHeader.parse(buf), size.toLong)
-      blocks += 1
+      if (size == buf.length) buf = java.util.Arrays.copyOf(buf, size * 2)
+      in.readFully(pos + size, buf, size, BlockSize)
+      size += BlockSize
+      if (containsEnd(buf, size - BlockSize, size)) {
+        val raw = if (size == buf.length) buf
+          else java.util.Arrays.copyOf(buf, size)
+        return (FitsHeader.parse(raw), size.toLong)
+      }
     }
     throw new IllegalArgumentException(
       s"$path: no END card within $MaxHeaderBlocks header blocks at byte $pos")
   }
 
-  private def containsEnd(buf: Array[Byte]): Boolean = {
-    var i = 0
-    while (i + CardSize <= buf.length) {
+  /** True iff a card in `buf[from, until)` is END followed by blanks. */
+  private def containsEnd(buf: Array[Byte], from: Int, until: Int): Boolean = {
+    var i = from
+    while (i + CardSize <= until) {
       if (buf(i) == 'E' && buf(i + 1) == 'N' && buf(i + 2) == 'D' &&
         (CardSize == 3 || isBlank(buf, i + 3, i + CardSize))) return true
       i += CardSize

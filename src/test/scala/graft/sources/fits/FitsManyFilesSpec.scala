@@ -7,9 +7,11 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 
-/** Many-files behavior: schema inference opens one file, planning
-  * scans each file's headers once (parallel, driver-side), the union
-  * is complete and ordered within each file.
+/** Many-files behavior: schema inference walks one file, planning
+  * walks the rest in parallel on the driver, and every file's headers
+  * are read once per load() whatever actions follow (I/O counts pinned
+  * in FitsMetadataIoSpec); the union is complete and ordered within
+  * each file.
   */
 class FitsManyFilesSpec extends SparkTestBase {
 
