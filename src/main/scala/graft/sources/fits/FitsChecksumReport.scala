@@ -1,6 +1,5 @@
 package graft.sources.fits
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -51,15 +50,13 @@ object FitsChecksumReport {
         }
         header ++ data
       }
-    import scala.jdk.CollectionConverters._
-    val props = conf.iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
+    val props = FitsFiles.shipConf(conf)
     val parallelism = math.max(1,
       math.min(ranges.size, spark.sparkContext.defaultParallelism * 2))
     val partials = spark.sparkContext
       .parallelize(ranges, parallelism)
       .mapPartitions { it =>
-        val c = new Configuration()
-        props.foreach { case (k, v) => c.set(k, v) }
+        val c = FitsFiles.taskConf(props)
         val buf = new Array[Byte](4 << 20)
         it.map { case (file, hdu, start, end, isData) =>
           val path = new Path(file)

@@ -1223,10 +1223,7 @@ final class FitsScan(res: FitsResolution, tableSchema: StructType,
     // ship the driver's Hadoop conf (object-store credentials, FS
     // settings) to executor readers — a bare `new Configuration()`
     // would silently drop them on a real cluster
-    import scala.jdk.CollectionConverters._
-    val props = res.hadoopConf.iterator().asScala
-      .map(e => (e.getKey, e.getValue)).toArray
-    new FitsPartitionReaderFactory(props)
+    new FitsPartitionReaderFactory(FitsFiles.shipConf(res.hadoopConf))
   }
 
   override def toMicroBatchStream(checkpointLocation: String)
@@ -1424,11 +1421,8 @@ final case class FitsInputPartition(
 final class FitsPartitionReaderFactory(confProps: Array[(String, String)])
     extends PartitionReaderFactory {
 
-  @transient private lazy val hadoopConf: Configuration = {
-    val c = new Configuration()
-    confProps.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
+  @transient private lazy val hadoopConf: Configuration =
+    FitsFiles.taskConf(confProps)
 
   override def createReader(p: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
     val fp = p.asInstanceOf[FitsInputPartition]

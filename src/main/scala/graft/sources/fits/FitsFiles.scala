@@ -38,6 +38,24 @@ object FitsFiles {
     }
   }
 
+  /** The driver's resolved Hadoop settings (defaults and site files
+    * included), shipped to tasks so object-store credentials and FS
+    * settings reach executors; [[taskConf]] rebuilds them there. */
+  def shipConf(conf: Configuration): Array[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    conf.iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
+  }
+
+  /** A task-side Configuration holding exactly the shipped settings.
+    * Built without default resources: the shipped set already holds
+    * them, so parsing core-default.xml/core-site.xml again per task is
+    * pure overhead. */
+  def taskConf(props: Array[(String, String)]): Configuration = {
+    val c = new Configuration(false)
+    props.foreach { case (k, v) => c.set(k, v) }
+    c
+  }
+
   /** Bounded driver-side parallel map (used for per-file header walks —
     * one small positioned read per HDU, latency-bound on object stores).
     */
